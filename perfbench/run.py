@@ -1,16 +1,15 @@
 #!/usr/bin/env python3
 """The repository's benchmark: one command, one workload per run.
 
-    python3 perfbench/run.py --workload spj_dialect --seed 1 --seconds 6 --trace 0
+    python3 perfbench/run.py --workload spj_dialect --seed 1 --seconds 12 --trace 0
 
-A run writes its input tables once per checkout (``datagen.py``), takes one
-extra session set-up sample in a fresh process, then starts the measuring
-process (``worker.py``): session set-up, a cold pass, a settling pass, warm
-passes for ``--seconds`` (closed loop, one client), then one output check
-per entry against DuckDB.  ``--trace 1`` prints the per-layer metrics
-instead of the end-to-end ones.  The last line of standard output is the
-result JSON; the lines before it are a readable report.  See
-``perfbench/README.md``.
+A run writes its input tables once per checkout (``datagen.py``), then
+starts a fresh measuring process (``worker.py``): session set-up, a cold
+pass, two settling passes, warm passes for ``--seconds`` (closed loop, one
+client), then one output check per entry against DuckDB.  ``--trace 1``
+prints the per-layer metrics instead of the end-to-end ones.  The last line
+of standard output is the result JSON; the lines before it are a readable
+report.  See ``perfbench/README.md``.
 """
 
 from __future__ import annotations
@@ -33,28 +32,28 @@ PACKAGE = "spj_query_engine_spark"
 
 #: input scale: sf 0.01 (60k lineitem rows, 10k events, 500 embeddings)
 SF = 0.01
-#: set-up samples per run: this many probe processes plus the measuring one
-SETUP_PROBES = 1
 #: a run that has not finished by then is stopped and fails
 DEADLINE_S = 170.0
 
 #: the gated end-to-end metrics.  Apart from set-up, they are CPU seconds
 #: used by the run's processes (this client, the JVM, Spark's Python
 #: workers): on a shared VM the wall time of identical runs moves 1.3-1.8x
-#: with the host's load, their CPU seconds a few percent.  The wall-clock
-#: twins are printed beside them (see README.md, "Why CPU seconds").
+#: with the host's load, far past any bound a gate can use, their CPU
+#: seconds much less (see README.md, "CPU seconds and wall time").
 END_TO_END = {
     "setup_s": "s",
     "first_pass_cpu_s": "s",
     "pass_cpu_s": "s",
     "query_cpu_s.geomean": "s",
-    "query_cpu_s.tail": "s",
 }
-#: printed, not gated
-WALL = {
+#: printed with their sample counts, not gated: the wall-clock twins, and
+#: the tails, which on a workload of three entries are a percentile of a
+#: mixture of three entry sizes rather than a tail (README.md)
+REPORTED = {
     "first_pass_s": "s",
     "pass_s": "s",
     "query_s.geomean": "s",
+    "query_cpu_s.tail": "s",
     "query_s.tail": "s",
 }
 PER_LAYER = {
@@ -120,6 +119,8 @@ def child_env() -> dict[str, str]:
     )
     env["TMPDIR"] = os.path.join(SCRATCH, "tmp")
     env["SPARK_LOCAL_DIRS"] = os.path.join(SCRATCH, "spark-local")
+    # the package's 16g default heap would exceed the memory of a small
+    # shared machine; a run's JVM peaks at 1-2.5 GB of RSS at this scale
     env["SPARK_GRAFT_DRIVER_MEM"] = "4g"
     env["PYTHONWARNINGS"] = "ignore::FutureWarning"
     for d in (env["TMPDIR"], env["SPARK_LOCAL_DIRS"]):
@@ -156,7 +157,7 @@ def _on_signal(signum, _frame) -> None:
     sys.exit(128 + signum)
 
 
-def run_worker(label: str, args: list[str], log_path: str, deadline: float) -> dict:
+def run_worker(args: list[str], log_path: str, deadline: float) -> dict:
     out_path = os.path.join(WORK, f"result-{os.getpid()}.json")
     env = child_env()
     if os.path.exists(out_path):
@@ -183,7 +184,7 @@ def run_worker(label: str, args: list[str], log_path: str, deadline: float) -> d
         result = json.load(fh)
     os.remove(out_path)
     result["wall_s"] = time.time() - t0
-    print(f"perfbench: {label} process took {result['wall_s']:.1f} s", file=sys.stderr)
+    print(f"perfbench: measuring process took {result['wall_s']:.1f} s", file=sys.stderr)
     return result
 
 
@@ -226,9 +227,9 @@ def _timings(prefix: str, first: float, passes: list[float], per_entry: dict) ->
     return values, samples
 
 
-def end_to_end(setups: list[float], res: dict) -> tuple[dict, dict]:
-    values = {"setup_s": statistics.median(setups)}
-    samples = {"setup_s": len(setups)}
+def end_to_end(res: dict) -> tuple[dict, dict]:
+    values = {"setup_s": res["setup_s"]}
+    samples = {"setup_s": 1}
     for prefix, first, passes, per_entry in (
         ("_cpu_s", res["first_pass_cpu_s"], res["warm_cpu_passes"], res["warm_cpu"]),
         ("_s", res["first_pass_s"], res["warm_passes"], res["warm_latencies"]),
@@ -270,20 +271,15 @@ def main() -> int:
         os.remove(log_path)
     common = ["--data", data_dir, "--scratch", SCRATCH, "--cores", str(cores())]
 
-    setups = []
-    if not args.trace:
-        for _ in range(SETUP_PROBES):
-            setups.append(run_worker("set-up probe", [*common, "--probe"], log_path, deadline)["setup_s"])
     main_args = [*common, "--workload", args.workload, "--seed", str(args.seed),
                  "--seconds", str(args.seconds), "--trace", str(args.trace)]
     if args.inject_failure:
         main_args += ["--inject-failure", args.inject_failure]
     if args.alter_result:
         main_args += ["--alter-result", args.alter_result]
-    res = run_worker("measuring", main_args, log_path, deadline)
-    setups.append(res["setup_s"])
+    res = run_worker(main_args, log_path, deadline)
     with open(log_path[:-4] + ".json", "w") as fh:
-        json.dump({"setups": setups, **res}, fh, indent=1)
+        json.dump(res, fh, indent=1)
 
     check = res["check"]
     correct = not check["wrong"] and not check["failed"]
@@ -309,10 +305,10 @@ def main() -> int:
         for name, unit in units.items():
             print(f"  {name:<26}{values[name]:>12.4f}  {unit}")
     else:
-        values, samples = end_to_end(setups, res)
+        values, samples = end_to_end(res)
         units = END_TO_END
-        for name, unit in {**units, **WALL}.items():
-            note = "" if name in units else "  (wall clock, not gated)"
+        for name, unit in {**units, **REPORTED}.items():
+            note = "" if name in units else "  (not gated)"
             print(f"  {name:<26}{values[name]:>12.4f}  {unit:<6} n={samples[name]}{note}")
     bad = [k for k in units if not math.isfinite(values[k])]
     if bad:

@@ -58,6 +58,11 @@ def test_end_to_end_metrics_and_clean_outputs(workload):
     assert "failed_frac" in report and "wrong_results" in report
     for m in SPEC["end_to_end"]:
         assert result["metrics"][m["name"]]["value"] > 0, m["name"]
+    # the metrics printed but not gated, each with its unit
+    reported = ("first_pass_s", "pass_s", "query_s.geomean", "query_cpu_s.tail", "query_s.tail")
+    for name in reported:
+        line = next(line for line in report.splitlines() if line.split()[:1] == [name])
+        assert line.split()[2] == "s" and "(not gated)" in line, line
 
 
 @pytest.mark.parametrize("workload", [w["name"] for w in SPEC["workloads"]])
@@ -69,6 +74,10 @@ def test_per_layer_metrics(workload):
     assert values["jobs"] > 0 and values["stages"] > 0 and values["tasks"] > 0
     assert values["executor.run_s"] > 0 and values["session.start_s"] > 0
     assert "trace file:" in report
+    if workload == "embed_stream":
+        # e13 runs on the stream sub-session, cloned in the cold pass
+        assert values["session.clone_calls"] > 0 and values["session.clone_s"] > 0
+        assert values["coarse.calls"] > 0
 
 
 def test_injected_failure_and_altered_result_are_counted():

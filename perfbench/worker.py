@@ -1,8 +1,8 @@
 """One benchmark process: set up a session, run the passes, check outputs.
 
 Started by ``run.py`` in a fresh process for every run, so every run pays
-its own session set-up, cold pass and lazy caches.  ``--probe`` stops after
-set-up (the extra set-up samples).  The result goes to ``--out`` as JSON.
+its own session set-up, cold pass and lazy caches.  The result goes to
+``--out`` as JSON.
 """
 
 from __future__ import annotations
@@ -23,35 +23,39 @@ HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 sys.path.insert(0, ROOT)
 
-#: after the cold pass, one settling pass runs unreported: the JVM is still
-#: compiling the code the cold pass loaded, and that pass runs ~20% slow in
-#: wall time and ~40% high in CPU.  Then warm passes run until ``--seconds``
-#: have passed and at least this many ran, so medians are of settled passes.
-MIN_WARM_PASSES = 3
-#: traced runs: after the settling pass, passes run traced, untraced,
+#: after the cold pass, settling passes run unreported: the JVM is still
+#: compiling the code the cold pass loaded, and the first pass after it runs
+#: ~20% slow in wall time and ~40% high in CPU, the second still ~15% high
+SETTLING_PASSES = 2
+#: then warm passes run until ``--seconds`` have passed and at least this
+#: many ran, so medians are of settled passes
+MIN_WARM_PASSES = 5
+#: traced runs: after the settling passes, passes run traced, untraced,
 #: untraced, traced, ...; the traced/untraced medians give the tracing
 #: overhead
 MIN_TRACED_PASSES = 2
 
 
-def start_session(cores: int, scratch: str):
+def start_session(cores: int, scratch: str, trace: bool):
     from spj_query_engine_spark.session import get_spark
 
     tmp = os.path.join(scratch, "tmp")
+    conf = {
+        # keep every file Spark writes inside the benchmark's work dir
+        "spark.local.dir": os.path.join(scratch, "spark-local"),
+        "spark.sql.warehouse.dir": os.path.join(scratch, "warehouse"),
+        "spark.driver.extraJavaOptions": f"-Djava.io.tmpdir={tmp} -XX:-UsePerfData",
+        "spark.ui.showConsoleProgress": "false",
+    }
+    if trace:
+        # the traced run reads jobs and tasks back from the status store
+        conf["spark.ui.retainedJobs"] = "100000"
+        conf["spark.ui.retainedStages"] = "100000"
     return get_spark(
         app_name="perfbench",
         master=f"local[{cores}]",
         shuffle_partitions=cores,
-        extra_conf={
-            # keep every file Spark writes inside the benchmark's work dir
-            "spark.local.dir": os.path.join(scratch, "spark-local"),
-            "spark.sql.warehouse.dir": os.path.join(scratch, "warehouse"),
-            "spark.driver.extraJavaOptions": f"-Djava.io.tmpdir={tmp} -XX:-UsePerfData",
-            "spark.ui.showConsoleProgress": "false",
-            # the traced run reads jobs and tasks back from the status store
-            "spark.ui.retainedJobs": "100000",
-            "spark.ui.retainedStages": "100000",
-        },
+        extra_conf=conf,
     )
 
 
@@ -196,8 +200,7 @@ def main() -> int:
     ap.add_argument("--scratch", required=True)
     ap.add_argument("--out", required=True)
     ap.add_argument("--cores", type=int, required=True)
-    ap.add_argument("--probe", action="store_true")
-    ap.add_argument("--workload")
+    ap.add_argument("--workload", required=True)
     ap.add_argument("--seed", type=int, default=0)
     ap.add_argument("--seconds", type=float, default=10.0)
     ap.add_argument("--trace", type=int, default=0)
@@ -209,12 +212,10 @@ def main() -> int:
     from spj_query_engine_spark.catalog import load_tables
 
     t_import = time.time()
-    spark = start_session(args.cores, args.scratch)
+    spark = start_session(args.cores, args.scratch, bool(args.trace))
     t_session = time.time()
     load_tables(spark, args.data, ("region",))["region"].count()
     out = {"setup_s": time.time() - args.t0, "session.start_s": t_session - t_import}
-    if args.probe:
-        return finish(args.out, out)
 
     import workloads
     from layertrace import Tracer
@@ -243,7 +244,8 @@ def main() -> int:
     # a traced run traces the cold pass too: the sub-session clones happen
     # only there
     cold = one_pass(0, bool(args.trace))
-    one_pass(1, False)  # settling pass, not reported
+    for pass_no in range(1, SETTLING_PASSES + 1):
+        one_pass(pass_no, False)  # not reported
     warm: list[tuple[bool, dict[str, tuple[float, float]]]] = []
     t_warm = time.perf_counter()
     ticks0 = cpu_ticks()
@@ -256,9 +258,8 @@ def main() -> int:
         return len(warm) >= MIN_WARM_PASSES
 
     while not enough():
-        pass_no = len(warm) + 2
-        traced = bool(args.trace) and pass_no % 4 in (1, 2)
-        warm.append((traced, one_pass(pass_no, traced)))
+        traced = bool(args.trace) and len(warm) % 4 in (0, 3)
+        warm.append((traced, one_pass(len(warm) + SETTLING_PASSES + 1, traced)))
     measured_s = time.perf_counter() - t_warm
     ticks = [b - a for a, b in zip(ticks0, cpu_ticks())]
     t_check = time.perf_counter()
@@ -299,7 +300,9 @@ def main() -> int:
     })
     if args.trace:
         tracer = runner.tracer
-        traced_passes = [i + 2 for i, (traced, _) in enumerate(warm) if traced]
+        traced_passes = [
+            i + SETTLING_PASSES + 1 for i, (traced, _) in enumerate(warm) if traced
+        ]
         per_pass = [tracer.pass_metrics(p) for p in traced_passes]
         layer = {k: statistics.median(m[k] for m in per_pass) for k in per_pass[0]}
         cold_layers = tracer.pass_metrics(0)

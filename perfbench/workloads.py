@@ -13,11 +13,13 @@ import random
 from dataclasses import dataclass
 
 #: registry entries of the ``embed_stream`` workload: the embedding
-#: dedup/similarity family (coarse materialization, iterative many-stage
-#: jobs, the most shuffle) and the streaming family (cached stream
-#: sub-sessions, state stores, Python state workers).
+#: dedup/similarity family (iterative many-stage jobs through
+#: ``coarse_materialize``, the most shuffle) and the streaming family
+#: (state stores; ``e06`` runs Python state workers on the caller's
+#: session, ``e13`` runs the native session window on the cached stream
+#: sub-session of ``ingest.stream_session``, which the cold pass clones).
 EMBED_ENTRIES = ("d06_embedding_near_dup",)
-STREAM_ENTRIES = ("e06_stream_sessionize",)
+STREAM_ENTRIES = ("e06_stream_sessionize", "e13_stream_session")
 
 SEGMENTS = ("AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY")
 
