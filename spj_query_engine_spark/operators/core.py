@@ -32,6 +32,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spj_query_engine_spark.catalog import load_table
+from spj_query_engine_spark.session import scoped
 
 # The six comparison operators of the reference dialect
 # (src/qp/utils/Condition.java:9-14).
@@ -229,10 +230,6 @@ def barrier(df: DataFrame) -> DataFrame:
     return df.localCheckpoint(eager=True)
 
 
-#: one coarse sub-session per Spark application (keyed by applicationId);
-#: created lazily by :func:`_coarse_subsession`, marked with the
-#: ``_spj_coarse_sub`` attribute nested scopes use to no-op
-_COARSE_SUBSESSIONS: dict[str, SparkSession] = {}
 _COARSE_SEQ = itertools.count()
 
 
@@ -254,26 +251,6 @@ def _coarse_target(df: DataFrame, floor: int, per_partition: int) -> int | None:
         return None
     target = max(floor, min(default, size // per_partition + 1))
     return None if target >= default else target
-
-
-def _coarse_subsession(parent: SparkSession) -> SparkSession:
-    """The application's PRIVATE coarse-materialization session:
-    ``parent.newSession()`` shares the SparkContext, table cache, and
-    global temp views but has an ISOLATED SQLConf — so lowering its
-    ``spark.sql.shuffle.partitions`` can never leak into jobs running on
-    the parent (the session-global mutation + module lock + sequential-
-    execution contract the r07/r08 design needed are all gone).  Created
-    via :func:`…session.clone_session`, so the parent's explicit conf
-    (UTC timezone, AQE, Arrow, nanos-as-long, …) carries over."""
-    from spj_query_engine_spark.session import clone_session
-
-    key = parent.sparkContext.applicationId
-    sub = _COARSE_SUBSESSIONS.get(key)
-    if sub is None:
-        sub = clone_session(parent)
-        sub._spj_coarse_sub = True  # nested-scope marker
-        _COARSE_SUBSESSIONS[key] = sub
-    return sub
 
 
 def _reroot(df: DataFrame, to_session: SparkSession) -> DataFrame:
@@ -322,8 +299,10 @@ def coarse_materialize(
     ONE exchange, but the win lives in the ~10 interior shuffles of the
     banded derivation — the only per-plan way to coarsen all of them is to
     plan the subtree under a conf where ``spark.sql.shuffle.partitions`` is
-    low.  ``SparkSession.newSession()`` gives exactly that scope: an
-    isolated SQLConf over the same SparkContext.  The input plan crosses
+    low.  :func:`…session.scoped` gives exactly that scope: an isolated
+    SQLConf over the same SparkContext, cached per (application, target,
+    ``aqe``, ``coalesce``), so concurrent scopes with different settings
+    never share a session.  The input plan crosses
     sessions via a global temp view, the built plan materializes eagerly
     (``barrier``) under the coarse conf, and the ExistingRDD-backed result
     is re-rooted to the caller's session so every downstream consumer
@@ -339,7 +318,7 @@ def coarse_materialize(
     the scope only.  AQE exists to re-plan large shuffles; within a
     provably-KB-scale materialization two of its behaviors can be pure
     overhead, measured per entry by interleaved A/B
-    (scripts/ab_coarse_aqe_r10.py, both knob variants in git history):
+    (the A/B script and both knob variants are in git history):
 
     * ``coalesce=False`` keeps AQE's runtime join re-planning but stops the
       advisory-size coalescer from collapsing every tiny exchange to ONE
@@ -358,8 +337,8 @@ def coarse_materialize(
     live, so production-scale inputs always run full AQE via the same
     estimate clamp.
     Nested scopes (e.g. ``lsh_pairs_ckpt`` invoked inside a graph builder
-    that is itself coarse-materializing) detect the sub-session marker and
-    no-op into the enclosing scope's conf.
+    that is itself coarse-materializing) detect the coarse-session marker
+    and no-op into the enclosing scope's conf.
 
     Under the plan-hygiene suite's ``SPJ_LAZY_PLANS=1`` (pytest only, see
     :func:`barrier`) the full lazy plan is returned on the caller's session
@@ -381,15 +360,16 @@ def coarse_materialize(
     target = _coarse_target(df, floor, per_partition)
     if target is None:
         return barrier(build(df))
-    sub = _coarse_subsession(spark)
-    sub.conf.set("spark.sql.shuffle.partitions", str(target))
-    # always set explicitly: the sub-session is shared across scopes, so a
-    # previous scope's choice must never leak into this one
-    sub.conf.set("spark.sql.adaptive.enabled", "true" if aqe else "false")
-    sub.conf.set(
-        "spark.sql.adaptive.coalescePartitions.enabled",
-        "true" if coalesce else "false",
+    sub = scoped(
+        spark,
+        {
+            "spark.sql.shuffle.partitions": target,
+            "spark.sql.adaptive.enabled": aqe,
+            # always in the key, so a stream scope never shares this clone
+            "spark.sql.adaptive.coalescePartitions.enabled": coalesce,
+        },
     )
+    sub._spj_coarse_sub = True  # nested-scope marker
     out = barrier(build(_reroot(df, sub)))
     return _reroot(out, spark)
 

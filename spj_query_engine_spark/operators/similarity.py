@@ -53,26 +53,7 @@ SIGN_BITS = 12  # hyperplane count
 SIGN_BANDS = 3  # 3 bands × 4 bits for the candidate join
 _BAND_WIDTH = SIGN_BITS // SIGN_BANDS
 EMB_DIM = 64  # testdata embedding dimensionality (drives unrolled codegen)
-MAX_PLANE_DIM = 256  # LSH plane-matrix cap when the true dim is undeclared
-
-
-def dim_of(df: DataFrame, vec_col: str) -> int | None:
-    """Static embedding dimensionality WITHOUT running a job at plan-build
-    time (the previous version issued a ``.first()`` — one extra Spark job
-    per plan construction).  Parquet list columns carry no static length in
-    the schema, so the only cheap source is the session conf
-    ``spj.embedding.dim`` (set it at deployment); otherwise ``None`` selects
-    the ``F.aggregate`` fold path, which handles any dimensionality AND
-    measured ~3× faster than the unrolled element_at chain inside pair
-    loops at sf0.1 (the unrolled form also risks janino's 64 KB method
-    limit at higher dims)."""
-    try:
-        conf = df.sparkSession.conf.get("spj.embedding.dim", None)
-        if conf is not None:
-            return int(conf)
-    except Exception:
-        pass
-    return None
+MAX_PLANE_DIM = 256  # LSH plane-matrix rows (index-derived; unused rows never join)
 
 
 def _plane_component(j: int, i: int) -> float:
@@ -135,8 +116,7 @@ def brute_force_topk(
     per-query k-row window."""
     from spj_query_engine_spark.operators.core import spread
 
-    dim = dim_of(embeddings, vec_col)
-    norm = F.sqrt(dot_product(F.col(vec_col), F.col(vec_col), dim))
+    norm = F.sqrt(dot_product(F.col(vec_col), F.col(vec_col)))
     embeddings = spread(embeddings, id_col)
     q = embeddings.filter(F.col(id_col) < n_queries).select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec"),
@@ -147,7 +127,7 @@ def brute_force_topk(
         norm.alias("c_norm"),
     )
     sim = portable_round(
-        dot_product(F.col("q_vec"), F.col("c_vec"), dim) / (F.col("q_norm") * F.col("c_norm")),
+        dot_product(F.col("q_vec"), F.col("c_vec")) / (F.col("q_norm") * F.col("c_norm")),
         6,
     )
     scored = (
@@ -216,11 +196,10 @@ def _sign_buckets(
     oracle's sequential-fold twin."""
     from spj_query_engine_spark.operators.core import spread
 
-    dim = dim_of(embeddings, vec_col) or MAX_PLANE_DIM
     spark = embeddings.sparkSession
-    planes = _planes(dim)
+    planes = _planes(MAX_PLANE_DIM)
     pl = spark.createDataFrame(
-        [(i, *[planes[j][i] for j in range(SIGN_BITS)]) for i in range(dim)],
+        [(i, *[planes[j][i] for j in range(SIGN_BITS)]) for i in range(MAX_PLANE_DIM)],
         ["pos"] + [f"p{j}" for j in range(SIGN_BITS)],
     )
     el = spread(embeddings, id_col).select(
@@ -2055,7 +2034,6 @@ def mmr_topk(
     propagation rounds.  All comparisons run on 6-dp portable-rounded
     cosines combined with one multiply-subtract, so both engines order
     candidates identically; ties break on cand_id."""
-    dim = dim_of(embeddings, vec_col)
     cands = brute_force_topk(
         embeddings, vec_col, id_col, k=pool, n_queries=n_queries
     ).select("query_id", "cand_id", F.col("cosine").alias("rel"))
@@ -2067,10 +2045,10 @@ def mmr_topk(
     )
     a, b = cv.alias("a"), cv.alias("b")
     pair_sim = portable_round(
-        dot_product(F.col("a.v"), F.col("b.v"), dim)
+        dot_product(F.col("a.v"), F.col("b.v"))
         / (
-            F.sqrt(dot_product(F.col("a.v"), F.col("a.v"), dim))
-            * F.sqrt(dot_product(F.col("b.v"), F.col("b.v"), dim))
+            F.sqrt(dot_product(F.col("a.v"), F.col("a.v")))
+            * F.sqrt(dot_product(F.col("b.v"), F.col("b.v")))
         ),
         6,
     )

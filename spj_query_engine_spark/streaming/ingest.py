@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spj_query_engine_spark.catalog import table_path
-from spj_query_engine_spark.session import clone_session
+from spj_query_engine_spark.session import scoped
 from spj_query_engine_spark.operators.temporal import ROLLUP_HOURS
 
 WATERMARK = "1 hour"
@@ -94,6 +94,26 @@ def _source_bytes(path: str) -> int:
     return os.path.getsize(path)
 
 
+def _stream_plan(spark: SparkSession, sf_dir: str, table: str) -> tuple[int, bool]:
+    """(state partition count, tiny) for a finite streaming replay — the
+    one derivation behind :func:`resolve_stream_partitions` and
+    :func:`stream_session`.  ``tiny`` holds only when no
+    ``spj.stream.state.partitions`` override is set, the byte-derived count
+    is below the session parallelism, AND the source is at most
+    4 × ``STREAM_STATE_TARGET_BYTES`` (the floor's own byte budget) — so
+    a large replay on a wide session never counts as tiny."""
+    override = spark.conf.get("spj.stream.state.partitions", None)
+    if override:
+        return int(override), False
+    try:
+        size = _source_bytes(table_path(sf_dir, table))
+    except OSError:
+        size = 0
+    cur = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
+    parts = max(4, min(cur, -(-size // STREAM_STATE_TARGET_BYTES)))
+    return parts, parts < cur and size <= 4 * STREAM_STATE_TARGET_BYTES
+
+
 def resolve_stream_partitions(
     spark: SparkSession, sf_dir: str, table: str = "events"
 ) -> int:
@@ -105,39 +125,7 @@ def resolve_stream_partitions(
     commits per batch; at 100x the derivation returns the session value
     unchanged, and a real deployment sets the conf explicitly (state
     partition count is fixed for the life of a checkpoint)."""
-    override = spark.conf.get("spj.stream.state.partitions", None)
-    if override:
-        return int(override)
-    try:
-        size = _source_bytes(table_path(sf_dir, table))
-    except OSError:
-        size = 0
-    cur = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    return max(4, min(cur, -(-size // STREAM_STATE_TARGET_BYTES)))
-
-
-#: stream sub-sessions, ONE per (applicationId, resolved partition count) —
-#: the r09 design cloned per QUERY, and ``clone_session``'s ~30-conf py4j
-#: mirror + ``newSession()`` landed a measurable fixed cost on every one of
-#: ~46 streaming entries (driver r09: e10 0.51×, e13 0.61×, e50 0.55× vs
-#: r08).  The partition count takes only a handful of values per corpus, so
-#: caching restores r08's per-query cost while keeping r09's isolation: the
-#: caller's session still never sees a stream conf.  Same pattern as
-#: ``operators.core._COARSE_SUBSESSIONS``.
-_STREAM_SUBSESSIONS: dict[tuple[str, int], SparkSession] = {}
-
-#: ``spj.*`` conf keys streaming runners read AFTER swapping to the stream
-#: session — re-synced from the parent on every cache hit, because tests
-#: toggle them on the parent between invocations and a cached clone would
-#: otherwise serve the value frozen at first-clone time.
-_STREAM_SYNC_KEYS = (
-    "spj.stream.sink",
-    "spj.stream.state.partitions",
-    "spj.stream.session.buckets",
-    "spj.stream.session.api",
-    "spj.stream.asof.api",
-    "spj.embedding.dim",
-)
+    return _stream_plan(spark, sf_dir, table)[0]
 
 
 def stream_session(
@@ -151,56 +139,29 @@ def stream_session(
     Replaces the r08 ``stream_state_conf`` context manager, which scoped
     the SESSION-GLOBAL conf: any other job materializing while a stream
     replay was in flight silently ran at the stream's (usually tiny) state
-    partition count.  :func:`…session.clone_session` mirrors the parent's
-    explicit conf — including test-set ``spj.*`` overrides — into a fresh
-    ``newSession``; each runner swaps its local ``spark`` to the stream
+    partition count.  Each runner swaps its local ``spark`` to the stream
     session as its first statement and every frame, sink table, and
     post-replay read lives there; the caller's session is untouched by
-    construction.  One clone is cached per (application, partition count)
-    and the ``spj.*`` keys are re-synced from the parent per call — queries
-    that resolve the same state partitioning share one sub-session instead
-    of each paying the clone's conf-mirror cost.
+    construction.  The session comes from :func:`…session.scoped`, so
+    queries that resolve the same settings share one clone and every
+    ``spj.*`` override is re-synced from the caller on each call.
 
     AQE on the stream session (r10): the per-micro-batch jobs a finite
     replay runs (foreachBatch transforms, sink writes, post-replay reads)
     are BATCH queries, so AQE's per-stage re-planning applies to each one
     — pure latency when the replay is provably tiny (interleaved A/B:
     e50 0.88, e06 0.89, e10 0.92, trivial rollups flat).  AQE is disabled
-    on the clone ONLY when the byte-derived partition count came out
-    below the session parallelism (input < STREAM_STATE_TARGET_BYTES ×
-    cores — the same provably-small clamp shape as
-    ``operators.core.coarse_materialize``); an explicit
-    ``spj.stream.state.partitions`` override or an at-scale input keeps
-    AQE on, so production replays are untouched."""
-    parts = resolve_stream_partitions(spark, sf_dir, table)
-    cur = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    tiny = parts < cur and not spark.conf.get(
-        "spj.stream.state.partitions", None
+    only when :func:`_stream_plan` calls the replay tiny; an explicit
+    override or an input past the byte cap keeps AQE on, so production
+    replays are untouched."""
+    parts, tiny = _stream_plan(spark, sf_dir, table)
+    return scoped(
+        spark,
+        {
+            "spark.sql.shuffle.partitions": parts,
+            "spark.sql.adaptive.enabled": not tiny,
+        },
     )
-    key = (spark.sparkContext.applicationId, parts)
-    sub = _STREAM_SUBSESSIONS.get(key)
-    if sub is None:
-        sub = clone_session(spark, parts)
-        _STREAM_SUBSESSIONS[key] = sub
-        sub.conf.set(
-            "spark.sql.adaptive.enabled", "false" if tiny else "true"
-        )
-    else:
-        for conf_key in _STREAM_SYNC_KEYS:
-            val = spark.conf.get(conf_key, None)
-            try:
-                if val is None:
-                    sub.conf.unset(conf_key)
-                else:
-                    sub.conf.set(conf_key, val)
-            except Exception:
-                pass
-        # re-derive per call: an override set between calls must restore
-        # full AQE even when the partition count (the cache key) matches
-        sub.conf.set(
-            "spark.sql.adaptive.enabled", "false" if tiny else "true"
-        )
-    return sub
 
 
 def stream_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

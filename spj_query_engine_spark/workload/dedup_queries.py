@@ -112,20 +112,13 @@ def d05_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
        dedup.NEARDUP_CELL_TARGET, dedup.FLAT_ASSIGN_MAX),
 )
 def d06_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from spj_query_engine_spark.operators.similarity import dim_of
-
     # n_cells=None → resolve_quantizer_cells: conf override, else the same
     # max(floor, ceil(n/target)) the oracle's scalar subquery computes — the
     # entry self-scales, no harness knob needed.  r10: coarse scope with
     # coalescing off (interleaved A/B 0.845, scripts/ab_coarse4_r10.py) —
     # the knob that rescued every assignment chain; the plain-AQE barrier
     # alone measured 1.6x slower in r09 and stays off.
-    return _emb_materialized(
-        spark,
-        sf_dir,
-        lambda e: dedup.embedding_near_dup(e, dim=dim_of(e, "embedding")),
-        coalesce=False,
-    )
+    return _emb_materialized(spark, sf_dir, dedup.embedding_near_dup, coalesce=False)
 
 
 @register(

@@ -304,6 +304,91 @@ def test_coarse_materialize_nested_scopes_noop(spark):
     assert sessions[0] is not spark
 
 
+def test_coarse_scope_resyncs_spj_conf(spark):
+    """Every coarse scope re-reads the caller's spj.* conf: an override set
+    on the caller after an earlier scope must reach the next scope's build,
+    and one unset on the caller must disappear from it."""
+    from spj_query_engine_spark.operators.core import coarse_materialize
+
+    tiny = spark.range(0, 1000, 1, 4).withColumn("k", F.col("id") % 7)
+    seen = []
+
+    def build(d):
+        assert d.sparkSession is not spark  # the scope is live
+        seen.append(d.sparkSession.conf.get("spj.neardup.cells", None))
+        return d.groupBy("k").agg(F.count(F.lit(1)).alias("c"))
+
+    coarse_materialize(build, tiny, floor=2).count()
+    spark.conf.set("spj.neardup.cells", "3")
+    try:
+        coarse_materialize(build, tiny, floor=2).count()
+    finally:
+        spark.conf.unset("spj.neardup.cells")
+    coarse_materialize(build, tiny, floor=2).count()
+    assert seen == [None, "3", None]
+
+
+def test_coarse_scopes_concurrent_knobs_isolated(spark):
+    """Two coarse scopes running at once with different AQE knobs each plan
+    under their own: B's scope starts while A's build is still running, and
+    A must still see adaptive execution off."""
+    import threading
+
+    from spj_query_engine_spark.operators.core import coarse_materialize
+
+    tiny = spark.range(0, 1000, 1, 4).withColumn("k", F.col("id") % 7)
+    a_building, b_building = threading.Event(), threading.Event()
+    seen, errors = {}, []
+
+    def build_a(d):
+        a_building.set()
+        assert b_building.wait(120), "scope B never started"
+        seen["a"] = d.sparkSession.conf.get("spark.sql.adaptive.enabled")
+        return d.groupBy("k").agg(F.count(F.lit(1)).alias("c"))
+
+    def build_b(d):
+        b_building.set()
+        seen["b"] = d.sparkSession.conf.get("spark.sql.adaptive.enabled")
+        return d.groupBy("k").agg(F.count(F.lit(1)).alias("c"))
+
+    def run(build, aqe):
+        try:
+            coarse_materialize(build, tiny, floor=2, aqe=aqe).count()
+        except Exception as exc:  # surfaced by the assertion below
+            errors.append(exc)
+
+    ta = threading.Thread(target=run, args=(build_a, False))
+    ta.start()
+    assert a_building.wait(120)
+    tb = threading.Thread(target=run, args=(build_b, True))
+    tb.start()
+    tb.join(300)
+    ta.join(300)
+    assert not ta.is_alive() and not tb.is_alive()
+    assert errors == []
+    assert seen == {"a": "false", "b": "true"}
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+
+
+def test_d06_rows_ignore_embedding_dim_conf(spark):
+    """d06 folds the WHOLE vector in every dot product: a session conf
+    naming a shorter dimensionality (``spj.embedding.dim`` once selected a
+    truncating unrolled kernel) must not change its rows."""
+    from spj_query_engine_spark.workload import REGISTRY
+
+    from tests.conftest import SF_DIR_MID
+
+    fn = REGISTRY["d06_embedding_near_dup"].fn
+    expect = sorted(map(tuple, fn(spark, SF_DIR_MID).collect()))
+    assert expect
+    spark.conf.set("spj.embedding.dim", "8")
+    try:
+        got = sorted(map(tuple, fn(spark, SF_DIR_MID).collect()))
+    finally:
+        spark.conf.unset("spj.embedding.dim")
+    assert got == expect
+
+
 def test_coarse_materialize_aqe_knobs(spark):
     """r10: the per-operator AQE knobs (aqe=, coalesce=) apply INSIDE the
     coarse sub-session only, are re-set on every scope (no leak between

@@ -11,7 +11,7 @@ from spj_query_engine_spark.operators import multimodal, temporal
 from spj_query_engine_spark.catalog import load_table
 from spj_query_engine_spark.streaming import ingest
 
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, SF_DIR_MID
 from spj_query_engine_spark.testing import compare_frames
 
 
@@ -818,6 +818,28 @@ def test_stream_session_cached_per_partition_count(spark):
         spark.conf.unset("spj.stream.state.partitions")
     # caller's conf untouched throughout
     assert spark.conf.get("spark.sql.shuffle.partitions") == prev_parts
+
+
+def test_stream_session_tiny_needs_small_source(spark, tmp_path):
+    """AQE goes off on a stream session only for a provably tiny replay.
+    A ~100 MB source at 64 shuffle partitions derives 25 state partitions
+    (below the session's 64) but is past the 16 MiB byte cap, so AQE must
+    stay on; the 2 MB sf0.01 events file stays tiny."""
+    from spj_query_engine_spark.streaming import ingest
+
+    with open(tmp_path / "events.parquet", "wb") as f:
+        f.truncate(100 << 20)  # sparse: size without data blocks
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "64")
+    try:
+        big = ingest.stream_session(spark, str(tmp_path))
+        assert big.conf.get("spark.sql.shuffle.partitions") == "25"
+        assert big.conf.get("spark.sql.adaptive.enabled") == "true"
+        small = ingest.stream_session(spark, SF_DIR_MID)
+        assert small.conf.get("spark.sql.shuffle.partitions") == "4"
+        assert small.conf.get("spark.sql.adaptive.enabled") == "false"
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
 def test_fold_sessions_matches_scalar_loop():
