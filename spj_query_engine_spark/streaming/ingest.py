@@ -69,6 +69,12 @@ def fresh_sink_table(spark: SparkSession, prefix: str) -> str:
 #: at 32 state partitions, 1.4 s at 4 — same result either way).
 STREAM_STATE_TARGET_BYTES = 4 << 20
 
+#: checkpoint file manager of the stream scope (see :func:`stream_session`)
+CHECKPOINT_FILE_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+
 
 def _source_bytes(path: str) -> int:
     """Data bytes behind a table path: the file's size, or — for a
@@ -153,13 +159,26 @@ def stream_session(
     e50 0.88, e06 0.89, e10 0.92, trivial rollups flat).  AQE is disabled
     only when :func:`_stream_plan` calls the replay tiny; an explicit
     override or an input past the byte cap keeps AQE on, so production
-    replays are untouched."""
+    replays are untouched.
+
+    Checkpoint I/O: without Hadoop's native library, Spark's default
+    ``FileContextBasedCheckpointFileManager`` forks ``readlink`` processes
+    to resolve checkpoint and state-store paths (112 of the 152 processes
+    an sf0.01 replay forked).  The scope pins the ``FileSystem``-based
+    manager instead, which resolves and renames inside the JVM; the
+    ``chmod`` that Hadoop's local file system forks per file create and
+    mkdir stays.  That manager checks for an existing target before a plain
+    rename rather than renaming with FileContext's no-overwrite flag, which
+    is safe here: a finite replay checkpoints into a fresh local temp dir
+    with one writer, where a POSIX rename is atomic.  Caller sessions keep
+    Spark's default."""
     parts, tiny = _stream_plan(spark, sf_dir, table)
     return scoped(
         spark,
         {
             "spark.sql.shuffle.partitions": parts,
             "spark.sql.adaptive.enabled": not tiny,
+            "spark.sql.streaming.checkpointFileManagerClass": CHECKPOINT_FILE_MANAGER,
         },
     )
 

@@ -107,7 +107,9 @@ def test_stateful_sessionize_equals_batch(spark):
 def test_stateful_sessionize_state_carries_across_batches(spark, tmp_path):
     """Split one user's events across two micro-batches at mid-session: the
     open-session tail must carry in state, and the re-emitted (extended)
-    session must supersede the first emission."""
+    session must supersede the first emission.  A second user of the same
+    bucket, with events only in the first batch, must not have its
+    carried tail re-emitted by the second batch."""
     from pyspark.sql import functions as F
     from spj_query_engine_spark.streaming.stateful import stateful_sessionize
 
@@ -115,7 +117,10 @@ def test_stateful_sessionize_state_carries_across_batches(spark, tmp_path):
     ms = 60_000
     # user 7: events at t=0,10min (batch 1) and 20min, 3h (batch 2)
     # → one session {0,10,20min} spanning the batch boundary, one {3h}
-    b1 = [(7, 1, 0 * ms, 1.5), (7, 2, 10 * ms, 2.5)]
+    # user 8: events at t=5min, 100min (batch 1 only) → sessions {5min},
+    # {100min}, the second one still open after batch 1
+    b1 = [(7, 1, 0 * ms, 1.5), (7, 2, 10 * ms, 2.5),
+          (8, 5, 5 * ms, 1.0), (8, 6, 100 * ms, 2.0)]
     b2 = [(7, 3, 20 * ms, 3.0), (7, 4, 180 * ms, 4.0)]
     cols = "user_id long, event_id long, ts_ms long, value double"
     in_dir = str(tmp_path / "in")
@@ -136,7 +141,7 @@ def test_stateful_sessionize_state_carries_across_batches(spark, tmp_path):
         .parquet(in_dir)
     )
     q = (
-        stateful_sessionize(stream, gap_minutes=gap_min)
+        stateful_sessionize(stream, gap_minutes=gap_min, buckets=1)
         .writeStream.outputMode("update")
         .format("memory")
         .queryName("carrytest")
@@ -151,6 +156,16 @@ def test_stateful_sessionize_state_carries_across_batches(spark, tmp_path):
     finally:
         q.stop()
     emitted = spark.table("carrytest").toPandas()
+    # user 8: each session emitted once, by batch 1 — the open tail is
+    # carried in state but not re-emitted by batch 2, which lacks user 8
+    u8 = emitted[emitted["user_id"] == 8].sort_values("session_no")
+    assert u8["session_no"].tolist() == [1, 2]
+    assert u8["n_events"].tolist() == [1, 1]
+    assert u8["session_end_ms"].tolist() == [5 * ms, 100 * ms]
+    emitted = emitted[emitted["user_id"] == 7]
+    # user 7: batch 1 emits the open session, batch 2 the extended session
+    # and the new one
+    assert len(emitted) == 3
     # latest emission per (user, session) = the one with the most events
     final = emitted.sort_values("n_events").groupby(["user_id", "session_no"]).last()
     sessions = {
@@ -796,6 +811,14 @@ def test_stream_session_cached_per_partition_count(spark):
     sub2 = ingest.stream_session(spark, sf)
     assert sub1 is sub2
     assert sub1 is not spark
+    # the stream scope checkpoints through the FileSystem-based manager
+    # (no readlink forks); the caller's session keeps Spark's default
+    manager_key = "spark.sql.streaming.checkpointFileManagerClass"
+    assert sub1.conf.get(manager_key) == (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager"
+    )
+    assert spark.conf.get(manager_key, None) is None
 
     spark.conf.set("spj.stream.state.partitions", "7")
     try:
@@ -842,19 +865,22 @@ def test_stream_session_tiny_needs_small_source(spark, tmp_path):
         spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
-def test_fold_sessions_matches_scalar_loop():
-    """The vectorized gap-split must be bit-identical to the per-event
-    scalar fold it replaced (including carry merge, carry close, and the
-    round-half-even micros), across random batches and random carries."""
+def test_fold_sessions_multi_matches_per_user():
+    """The bucket fold must be bit-identical to a per-event scalar gap loop
+    run independently for every user: same closed sessions (carry merge and
+    carry close included), same new tails (absent users' carried tails
+    passed through untouched), the same round-half-even micros — across
+    random single- and multi-user batches fed in shuffled row order and
+    random carried-tail sets."""
     import numpy as np
     import pandas as pd
 
-    from spj_query_engine_spark.streaming.stateful import _fold_sessions
+    from spj_query_engine_spark.streaming.stateful import _fold_sessions_multi
 
-    def scalar(rows, gap_ms, carry):
+    def scalar(ts_ms, values, gap_ms, carry):
         sno, start, end, n, micros = carry
         closed = []
-        for ts, val in zip(rows["ts_ms"].astype("int64"), rows["value"]):
+        for ts, val in zip(ts_ms, values):
             ts = int(ts)
             if start is None or ts - end > gap_ms:
                 if start is not None:
@@ -866,39 +892,51 @@ def test_fold_sessions_matches_scalar_loop():
             micros += int(round(float(val) * 1_000_000))
         return closed, (sno, start, end, n, micros)
 
-    rng = np.random.default_rng(7)
+    def frame(users, ts_ms, values, **extra):
+        return pd.DataFrame(
+            {
+                "user_id": np.asarray(users, dtype="int64"),
+                "ts": pd.to_datetime(np.asarray(ts_ms, dtype="int64"), unit="ms"),
+                "value": values,
+                **extra,
+            }
+        )
+
+    def fold(rows, gap_ms, tails, seed):
+        # the fold sorts its input itself: feed it shuffled rows
+        shuffled = rows.sample(frac=1, random_state=seed)
+        closed, new_tails = _fold_sessions_multi(shuffled, gap_ms, tails)
+        return (
+            list(zip(*(a.tolist() for a in closed))),
+            list(zip(*(a.tolist() for a in new_tails))),
+        )
+
     gap_ms = 1800_000
+    # one user, with and without a carried tail
+    rng = np.random.default_rng(7)
     for trial in range(60):
         m = int(rng.integers(1, 40))
         ts = np.sort(rng.integers(0, 50_000_000, size=m)).astype("int64")
         vals = np.round(rng.uniform(-5, 5, size=m), 6)
-        rows = pd.DataFrame({"ts_ms": ts, "value": vals})
         if trial % 3 == 0:
             carry = (0, None, None, 0, 0)
+            tails = ((),) * 6
         else:
             c_end = int(rng.integers(0, 10_000_000))
             carry = (int(rng.integers(1, 5)), c_end - 1000, c_end, 3, 12345)
-        assert _fold_sessions(rows, gap_ms, carry) == scalar(rows, gap_ms, carry)
-    # empty batch: carry passes through untouched
-    empty = pd.DataFrame({"ts_ms": pd.Series(dtype="int64"), "value": []})
-    assert _fold_sessions(empty, gap_ms, (2, 5, 9, 1, 7)) == ([], (2, 5, 9, 1, 7))
-
-
-def test_fold_sessions_multi_matches_per_user():
-    """The bucket fold must equal applying the per-user fold independently
-    to every user: same closed sessions (carry-closed included), same new
-    tails (absent users' carried tails passed through untouched), across
-    random multi-user batches and random carried-tail sets."""
-    import numpy as np
-    import pandas as pd
-
-    from spj_query_engine_spark.streaming.stateful import (
-        _fold_sessions,
-        _fold_sessions_multi,
+            tails = tuple([v] for v in (5, *carry))
+        exp_closed, exp_tail = scalar(ts, vals, gap_ms, carry)
+        got_closed, got_tails = fold(frame([5] * m, ts, vals), gap_ms, tails, trial)
+        assert got_closed == [(5, *c) for c in exp_closed]
+        assert got_tails == [(5, *exp_tail)]
+    # empty batch: carried tails pass through untouched
+    empty = frame([], [], np.empty(0))
+    assert fold(empty, gap_ms, ((5,), (2,), (5,), (9,), (1,), (7,)), 0) == (
+        [],
+        [(5, 2, 5, 9, 1, 7)],
     )
-
+    # many users per bucket
     rng = np.random.default_rng(23)
-    gap_ms = 1800_000
     for trial in range(40):
         n_users = int(rng.integers(1, 8))
         users = rng.choice(np.arange(100, 100 + 12), size=n_users, replace=False)
@@ -906,19 +944,15 @@ def test_fold_sessions_multi_matches_per_user():
         for uid in users:
             m = int(rng.integers(1, 25))
             frames.append(
-                pd.DataFrame(
-                    {
-                        "user_id": np.full(m, uid, dtype="int64"),
-                        "ts_ms": np.sort(
-                            rng.integers(0, 50_000_000, size=m)
-                        ).astype("int64"),
-                        "event_id": rng.integers(0, 10_000, size=m).astype("int64"),
-                        "value": np.round(rng.uniform(-5, 5, size=m), 6),
-                    }
+                frame(
+                    np.full(m, uid),
+                    np.sort(rng.integers(0, 50_000_000, size=m)),
+                    np.round(rng.uniform(-5, 5, size=m), 6),
+                    event_id=rng.integers(0, 10_000, size=m).astype("int64"),
                 )
             )
         rows = pd.concat(frames, ignore_index=True).sort_values(
-            ["user_id", "ts_ms", "event_id"], kind="mergesort"
+            ["user_id", "ts", "event_id"], kind="mergesort"
         )
         # carried tails: a subset of the batch users plus one absent user
         tail_users = sorted(
@@ -943,9 +977,7 @@ def test_fold_sessions_multi_matches_per_user():
                 [tails[u][4] for u in tail_users],
             ]
         )
-        closed, new_tails = _fold_sessions_multi(rows, gap_ms, t_arr)
-        got_closed = sorted(zip(*(a.tolist() for a in closed)))
-        got_tails = sorted(zip(*(a.tolist() for a in new_tails)))
+        got_closed, got_tails = fold(rows, gap_ms, t_arr, trial)
         exp_closed, exp_tails = [], []
         for u in sorted(set(users.tolist()) | set(tail_users)):
             sub = rows[rows["user_id"] == u]
@@ -953,11 +985,12 @@ def test_fold_sessions_multi_matches_per_user():
             if len(sub) == 0:
                 exp_tails.append((u, *carry))
                 continue
-            c, tail = _fold_sessions(sub, gap_ms, carry)
+            ts_ms = sub["ts"].to_numpy().astype("datetime64[ms]").astype("int64")
+            c, tail = scalar(ts_ms, sub["value"], gap_ms, carry)
             exp_closed.extend((u, *t) for t in c)
             exp_tails.append((u, *tail))
-        assert got_closed == sorted(exp_closed)
-        assert got_tails == sorted(exp_tails)
+        assert sorted(got_closed) == sorted(exp_closed)
+        assert sorted(got_tails) == sorted(exp_tails)
 
 
 def test_asof_fold_matches_scalar_loop():
