@@ -865,54 +865,58 @@ def test_stream_session_tiny_needs_small_source(spark, tmp_path):
         spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
-def test_fold_sessions_multi_matches_per_user():
-    """The bucket fold must be bit-identical to a per-event scalar gap loop
-    run independently for every user: same closed sessions (carry merge and
-    carry close included), same new tails (absent users' carried tails
-    passed through untouched), the same round-half-even micros — across
-    random single- and multi-user batches fed in shuffled row order and
-    random carried-tail sets."""
+def _scalar_session_fold(ts_ms, values, gap_ms, carry):
+    """Per-event scalar gap loop for one user: the reference the bucket
+    fold is checked against."""
+    sno, start, end, n, micros = carry
+    closed = []
+    for ts, val in zip(ts_ms, values):
+        ts = int(ts)
+        if start is None or ts - end > gap_ms:
+            if start is not None:
+                closed.append((sno, start, end, n, micros))
+            sno += 1
+            start, end, n, micros = ts, ts, 0, 0
+        end = ts
+        n += 1
+        micros += int(round(float(val) * 1_000_000))
+    return closed, (sno, start, end, n, micros)
+
+
+def _session_frame(users, ts_ms, values, **extra):
     import numpy as np
     import pandas as pd
 
+    return pd.DataFrame(
+        {
+            "user_id": np.asarray(users, dtype="int64"),
+            "ts": pd.to_datetime(np.asarray(ts_ms, dtype="int64"), unit="ms"),
+            "value": values,
+            **extra,
+        }
+    )
+
+
+def _run_session_fold(rows, gap_ms, tails, seed):
     from spj_query_engine_spark.streaming.stateful import _fold_sessions_multi
 
-    def scalar(ts_ms, values, gap_ms, carry):
-        sno, start, end, n, micros = carry
-        closed = []
-        for ts, val in zip(ts_ms, values):
-            ts = int(ts)
-            if start is None or ts - end > gap_ms:
-                if start is not None:
-                    closed.append((sno, start, end, n, micros))
-                sno += 1
-                start, end, n, micros = ts, ts, 0, 0
-            end = ts
-            n += 1
-            micros += int(round(float(val) * 1_000_000))
-        return closed, (sno, start, end, n, micros)
+    # the fold sorts its input itself: feed it shuffled rows
+    shuffled = rows.sample(frac=1, random_state=seed)
+    closed, new_tails = _fold_sessions_multi(shuffled, gap_ms, tails)
+    return (
+        list(zip(*(a.tolist() for a in closed))),
+        list(zip(*(a.tolist() for a in new_tails))),
+    )
 
-    def frame(users, ts_ms, values, **extra):
-        return pd.DataFrame(
-            {
-                "user_id": np.asarray(users, dtype="int64"),
-                "ts": pd.to_datetime(np.asarray(ts_ms, dtype="int64"), unit="ms"),
-                "value": values,
-                **extra,
-            }
-        )
 
-    def fold(rows, gap_ms, tails, seed):
-        # the fold sorts its input itself: feed it shuffled rows
-        shuffled = rows.sample(frac=1, random_state=seed)
-        closed, new_tails = _fold_sessions_multi(shuffled, gap_ms, tails)
-        return (
-            list(zip(*(a.tolist() for a in closed))),
-            list(zip(*(a.tolist() for a in new_tails))),
-        )
+def test_fold_sessions_matches_scalar_loop():
+    """For one user, the bucket fold must be bit-identical to the per-event
+    scalar gap loop (including carry merge, carry close, and the
+    round-half-even micros), across random batches fed in shuffled row
+    order and random carries; an empty batch passes the carry through."""
+    import numpy as np
 
     gap_ms = 1800_000
-    # one user, with and without a carried tail
     rng = np.random.default_rng(7)
     for trial in range(60):
         m = int(rng.integers(1, 40))
@@ -925,17 +929,29 @@ def test_fold_sessions_multi_matches_per_user():
             c_end = int(rng.integers(0, 10_000_000))
             carry = (int(rng.integers(1, 5)), c_end - 1000, c_end, 3, 12345)
             tails = tuple([v] for v in (5, *carry))
-        exp_closed, exp_tail = scalar(ts, vals, gap_ms, carry)
-        got_closed, got_tails = fold(frame([5] * m, ts, vals), gap_ms, tails, trial)
+        exp_closed, exp_tail = _scalar_session_fold(ts, vals, gap_ms, carry)
+        got_closed, got_tails = _run_session_fold(
+            _session_frame([5] * m, ts, vals), gap_ms, tails, trial
+        )
         assert got_closed == [(5, *c) for c in exp_closed]
         assert got_tails == [(5, *exp_tail)]
     # empty batch: carried tails pass through untouched
-    empty = frame([], [], np.empty(0))
-    assert fold(empty, gap_ms, ((5,), (2,), (5,), (9,), (1,), (7,)), 0) == (
-        [],
-        [(5, 2, 5, 9, 1, 7)],
-    )
-    # many users per bucket
+    empty = _session_frame([], [], np.empty(0))
+    assert _run_session_fold(
+        empty, gap_ms, ((5,), (2,), (5,), (9,), (1,), (7,)), 0
+    ) == ([], [(5, 2, 5, 9, 1, 7)])
+
+
+def test_fold_sessions_multi_matches_per_user():
+    """The bucket fold must equal the per-event scalar gap loop run
+    independently for every user: same closed sessions (carry-closed
+    included), same new tails (absent users' carried tails passed through
+    untouched), across random multi-user batches fed in shuffled row order
+    and random carried-tail sets."""
+    import numpy as np
+    import pandas as pd
+
+    gap_ms = 1800_000
     rng = np.random.default_rng(23)
     for trial in range(40):
         n_users = int(rng.integers(1, 8))
@@ -944,7 +960,7 @@ def test_fold_sessions_multi_matches_per_user():
         for uid in users:
             m = int(rng.integers(1, 25))
             frames.append(
-                frame(
+                _session_frame(
                     np.full(m, uid),
                     np.sort(rng.integers(0, 50_000_000, size=m)),
                     np.round(rng.uniform(-5, 5, size=m), 6),
@@ -977,7 +993,7 @@ def test_fold_sessions_multi_matches_per_user():
                 [tails[u][4] for u in tail_users],
             ]
         )
-        got_closed, got_tails = fold(rows, gap_ms, t_arr, trial)
+        got_closed, got_tails = _run_session_fold(rows, gap_ms, t_arr, trial)
         exp_closed, exp_tails = [], []
         for u in sorted(set(users.tolist()) | set(tail_users)):
             sub = rows[rows["user_id"] == u]
@@ -986,7 +1002,7 @@ def test_fold_sessions_multi_matches_per_user():
                 exp_tails.append((u, *carry))
                 continue
             ts_ms = sub["ts"].to_numpy().astype("datetime64[ms]").astype("int64")
-            c, tail = scalar(ts_ms, sub["value"], gap_ms, carry)
+            c, tail = _scalar_session_fold(ts_ms, sub["value"], gap_ms, carry)
             exp_closed.extend((u, *t) for t in c)
             exp_tails.append((u, *tail))
         assert sorted(got_closed) == sorted(exp_closed)
